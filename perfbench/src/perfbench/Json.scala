@@ -1,0 +1,45 @@
+package perfbench
+
+/** Minimal JSON writer for the run record (maps, sequences, strings,
+  * numbers, booleans, null); non-finite doubles become null.
+  */
+object Json {
+  def write(v: Any): String = {
+    val sb = new StringBuilder
+    def str(s: String): Unit = {
+      sb += '"'
+      s.foreach {
+        case '"' => sb ++= "\\\""
+        case '\\' => sb ++= "\\\\"
+        case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
+        case c => sb += c
+      }
+      sb += '"'
+    }
+    def go(v: Any): Unit = v match {
+      case null | None => sb ++= "null"
+      case Some(x) => go(x)
+      case s: String => str(s)
+      case b: Boolean => sb ++= b.toString
+      case d: Double => sb ++= (if (d.isNaN || d.isInfinite) "null" else d.toString)
+      case n: Number => sb ++= n.toString
+      case m: scala.collection.Map[_, _] =>
+        sb += '{'
+        var first = true
+        m.foreach { case (k, x) =>
+          if (!first) sb += ','
+          first = false
+          str(k.toString); sb += ':'; go(x)
+        }
+        sb += '}'
+      case s: Iterable[_] =>
+        sb += '['
+        var first = true
+        s.foreach { x => if (!first) sb += ','; first = false; go(x) }
+        sb += ']'
+      case other => str(other.toString)
+    }
+    go(v)
+    sb.toString
+  }
+}
